@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.logging.log4j.core.config.Configurator
 
 /** Benchmark main: one JSON line on stdout
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -12,31 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // AQE off for the LOCAL bench: adaptive re-planning adds ~100-300ms
-      // of stage-boundary latency per query, which dominates sub-second
-      // queries at sf0.1 (measured: 56.3s → 46.4s total). On a real
-      // cluster at real scale AQE pays for itself (skew joins, partition
-      // coalescing) and should be ON — this is a bench-harness setting,
-      // not an engine design choice.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Several operators localCheckpoint multiply-consumed frames; the
-      // blocks are freed by ContextCleaner only after a driver GC makes
-      // the RDDs unreachable, and the default periodic-GC interval
-      // (30 min) outlives the whole bench — storage from the first 150
-      // queries was taxing the last 50 (measured: c89 10.2s in the full
-      // sweep vs 2.3s focused). One GC a minute keeps the block store
-      // bounded, exactly what a long-lived cluster driver does.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     def exec(name: String, dir: String): Unit =
       SparkEntry.queries(name)(spark, dir)
@@ -89,15 +65,16 @@ object Bench {
       // unpersisting a localCheckpoint'd RDD makes it unrecoverable), so
       // the memo's own blocks are the keep set.
       // (the expected per-RDD "locally checkpointed ... cannot be
-      // recomputed" WARN is silenced below — these RDDs are garbage by
-      // construction, and 900+ identical lines would bury real warnings)
+      // recomputed" WARN is silenced for the sweep only — these RDDs are
+      // garbage by construction, and 900+ identical lines would bury real
+      // warnings; the level is restored so the rest of the JVM keeps them)
       val keep = graft.core.FrameMemo.ownedRddIds(spark)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.rdd.MapPartitionsRDD",
-        org.apache.logging.log4j.Level.ERROR)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      val rddLog = "org.apache.spark.rdd.MapPartitionsRDD"
+      val prevLevel = org.apache.logging.log4j.LogManager.getLogger(rddLog).getLevel
+      Configurator.setLevel(rddLog, org.apache.logging.log4j.Level.ERROR)
+      try spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!keep.contains(id)) rdd.unpersist(blocking = true)
-      }
+      } finally Configurator.setLevel(rddLog, prevLevel)
       name -> (if (times.isEmpty) -1.0 else times.min)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

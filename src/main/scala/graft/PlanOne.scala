@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
-/** Dump `.explain("formatted")` for named gates to files — the per-round
-  * plan evidence (`plans/r13/<gate>_<tag>.txt`). Usage:
-  * `runMain graft.PlanOne <sfDir> <outDir> <tag> <gate[,gate...]>`
+/** Print `.explain("formatted")` for named gates, or dump each to a file
+  * when an out-dir is given — the per-round plan evidence
+  * (`plans/r13/<gate>_<tag>.txt`). Usage:
+  * `runMain graft.PlanOne <sfDir> <gate[,gate...]> [<outDir> <tag>]`
   *
   * CAVEAT (r12 ADVICE): gates whose constructors eagerly localCheckpoint
   * shared frames EXECUTE those checkpoint-build subtrees during the dump,
@@ -17,25 +17,22 @@ import java.nio.file.{Files, Paths}
 object PlanOne {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val outDir = args(1)
-    val tag = args(2)
-    val names = args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    Files.createDirectories(Paths.get(outDir))
+    val names = args(1).split(",").toSeq
+    val out = if (args.length > 3) Some((args(2), args(3))) else None
+    val s = Session.local()
+    out.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
     names.foreach { name =>
       val p = SparkEntry.queries(name)(s, d).queryExecution
         .explainString(ExplainMode.fromString("formatted"))
-      val f = Paths.get(outDir, s"${name}_$tag.txt")
-      Files.writeString(f, p)
-      println(s"WROTE $f (${p.length} chars)")
+      out match {
+        case Some((dir, tag)) =>
+          val f = Paths.get(dir, s"${name}_$tag.txt")
+          Files.writeString(f, p)
+          println(s"WROTE $f (${p.length} chars)")
+        case None =>
+          println(s"==== $name ====")
+          println(p)
+      }
     }
     s.stop()
   }

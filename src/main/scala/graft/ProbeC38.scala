@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** A/B the c38 lane-cell pair join against the lanes=1 (cent-only)
   * shape on a given fixture — the r13 scale-topology evidence. Usage:
   * `runMain graft.ProbeC38 <sfDir> [reps]`; prints per-lane-count wall
@@ -11,13 +9,7 @@ object ProbeC38 {
   def main(args: Array[String]): Unit = {
     val d = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val policy = graft.ops.Similarity.c38Lanes(
       spark.sparkContext.defaultParallelism, 16)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB breakdown of one gate execution: registers a listener, runs the
   * gate (warm, noop-sink like the bench), prints every Spark job's wall
@@ -14,18 +13,7 @@ object ProbeJobs {
     val sfDir = args(0)
     val gateNames = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, Int, String)]()

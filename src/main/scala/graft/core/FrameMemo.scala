@@ -70,7 +70,7 @@ object FrameMemo {
       val df = build.localCheckpoint(true)
       val secs = (System.nanoTime() - t0) / 1e9
       val newIds = s.sparkContext.getPersistentRDDs.keySet.diff(before)
-      owned.put(s, ownedRddIds(s) ++ newIds)
+      owned.updateWith(s)(ids => Some(ids.getOrElse(Set.empty) ++ newIds))
       System.err.println(f"[memo] $key built in $secs%.2f s")
       df
     })

@@ -103,15 +103,6 @@ object Dedup {
     // session for the whole family
     graft.core.FrameMemo.cached(s, s"c2bands:$d")(bandsOfSig(mhSig(s, d)))
 
-  /** The band path over any (doc_id, text) frame — shared by the gate
-    * and [[graft.ProbeLsh]] so the probe measures the production kernel.
-    */
-  private[graft] def bandsOf(docFrame: DataFrame): DataFrame =
-    bandsOfSig(docFrame
-      .where(expr(s"size($wordsSpark) >= 3"))
-      .select(col("doc_id"),
-        graft.functions.MinHashSig(col("text"), nLanes).as("mh")))
-
   /** Band keys over a prebuilt (doc_id, mh) signature frame. */
   private def bandsOfSig(sig: DataFrame): DataFrame = {
     val bandKeys = (0 until nBands).map { b =>
@@ -138,7 +129,7 @@ object Dedup {
     * bands⋈bands self-join would recompute the whole signature pipeline
     * for each side — Spark plans no ReusedExchange here.)
     */
-  private[graft] def pairsFromBands(bands: DataFrame): DataFrame = {
+  private def pairsFromBands(bands: DataFrame): DataFrame = {
     val buckets = bands.groupBy(col("band"), col("bkey"))
       .agg(array_sort(collect_list(col("doc_id"))).as("ds"))
       .where(size(col("ds")) >= 2)
@@ -489,12 +480,13 @@ object Dedup {
     * at real near-dup thresholds (≥0.8) fewer tables give full recall at
     * a fraction of the candidates. At 100 TB the (table, bucket) key is
     * the shuffle key and candidate count is O(Σ bucket²), never O(n²).
-    * Regime note (ProbeEmbLsh, docs/PERF.md): the b-table OR-construction
-    * ships each vector b times — the right trade for the NEAR-EXACT
-    * regime (designCos ≥ 0.95, b ≈ 20); as the design threshold drops, b
-    * explodes (0.8 → b≈80 at policy plane counts) and the sub-0.8
-    * semantic regime belongs to C38's IVF-bucketed dedup, where the
-    * bucket set is trained centroids and each vector ships once.)
+    * Regime note (the r9 embedding-LSH probe, docs/PERF.md): the b-table
+    * OR-construction ships each vector b times — the right trade for the
+    * NEAR-EXACT regime (designCos ≥ 0.95, b ≈ 20); as the design
+    * threshold drops, b explodes (0.8 → b≈80 at policy plane counts)
+    * and the sub-0.8 semantic regime belongs to C38's IVF-bucketed
+    * dedup, where the bucket set is trained centroids and each vector
+    * ships once.)
     */
   private[graft] val c20Tables = 22
   private[graft] val c20Planes = 3
@@ -554,10 +546,10 @@ object Dedup {
       nTables, nPlanes, cosMin)
 
   /** The occupied LSH buckets of a normalized (vec_id, nv) frame — the
-    * kernel's only shuffle, shared by the gate and [[graft.ProbeEmbLsh]].
+    * kernel's only shuffle.
     */
-  private[graft] def c20Buckets(e: DataFrame,
-                                nTables: Int, nPlanes: Int): DataFrame = {
+  private def c20Buckets(e: DataFrame,
+                         nTables: Int, nPlanes: Int): DataFrame = {
     // all table keys from ONE codegen'd expression over the flattened
     // plane matrix — the inline per-table expression form broke janino's
     // method-size limits once the scale policy picked dozens of tables
@@ -826,18 +818,6 @@ object Dedup {
     }
   }
 
-  /** Union-find with path compression over a collected edge list —
-    * union-by-min keeps every root the component's minimum node id, so
-    * after full compression `find(node)` IS the min label the
-    * distributed loop converges to (same output, one Spark job).
-    */
-  private[graft] def ccMinLabelDriver(edges: DataFrame): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
-    ccUnionFind(es, edges)
-  }
-
   /** Driver path over already-collected edge rows (the ccMinLabel probe —
     * saves the second collect and the count job of the two-step form).
     */
@@ -845,6 +825,11 @@ object Dedup {
                                  edges: DataFrame): DataFrame =
     ccUnionFind(rows.map(r => (r.getLong(0), r.getLong(1))), edges)
 
+  /** Union-find with path compression over a collected edge list —
+    * union-by-min keeps every root the component's minimum node id, so
+    * after full compression `find(node)` IS the min label the
+    * distributed loop converges to (same output, one Spark job).
+    */
   private def ccUnionFind(es: Array[(Long, Long)],
                           edges: DataFrame): DataFrame = {
     val s = edges.sparkSession
@@ -869,7 +854,7 @@ object Dedup {
     out.toDF("node", "lab")
   }
 
-  private[graft] def ccMinLabelLoop(edges: DataFrame): DataFrame = {
+  private def ccMinLabelLoop(edges: DataFrame): DataFrame = {
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("lab", col("node")).localCheckpoint(true)
     var changed = 1L

@@ -1463,13 +1463,8 @@ object Similarity {
   }
 
   def c38SemanticDedup(s: SparkSession, d: String): DataFrame =
-    // SPARK_GRAFT_C38_LANES overrides the core-derived policy: cores are
-    // only a proxy for the real driver of the lane count (cluster
-    // occupancy — replication is L per side, so a deployment tunes
-    // cells to its measured cluster sizes, not its core count)
     c38SemanticDedupWith(s, d,
-      sys.env.get("SPARK_GRAFT_C38_LANES").map(_.toInt).getOrElse(
-        c38Lanes(s.sparkContext.defaultParallelism, trainCentroids(s, d).length)))
+      c38Lanes(s.sparkContext.defaultParallelism, trainCentroids(s, d).length))
 
   /** Lane-parameterized form — [[SimilaritySpec]] pins that every lane
     * count enumerates the identical pair set (L = 1 is the plain cent

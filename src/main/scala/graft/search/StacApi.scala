@@ -71,10 +71,13 @@ object SearchParams {
     * filter (cql2-json passthrough), sortby [{field, direction}],
     * fields {include, exclude}, limit, token. Unknown members are
     * ignored (API forward-compatibility); absent members keep the
-    * typed defaults.
+    * typed defaults. A body that is not a JSON object, or a sortby entry
+    * without a string `field`, is a client error (400).
     */
   def fromSearchBody(json: String): SearchParams = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val m = StacHttp.parseBody(json)
+    if (!m.isObject)
+      throw new IllegalArgumentException("search body must be a JSON object")
     import scala.jdk.CollectionConverters._
     def node(f: String) = Option(m.get(f)).filterNot(_.isNull)
     def strs(f: String): Seq[String] =
@@ -90,7 +93,10 @@ object SearchParams {
       if (a.length == 6) (a(0), a(1), a(3), a(4)) else (a(0), a(1), a(2), a(3))
     }
     val sorts = node("sortby").map(_.elements().asScala.map { sn =>
-      SortBy(sn.get("field").asText,
+      val field = Option(sn.get("field")).filter(_.isTextual).getOrElse(
+        throw new IllegalArgumentException(
+          s"each sortby entry needs a string field, got $sn"))
+      SortBy(field.asText,
         Option(sn.get("direction")).exists(_.asText == "desc"))
     }.toSeq).getOrElse(Nil)
     val fieldsNode = node("fields")

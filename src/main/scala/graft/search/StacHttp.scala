@@ -4,7 +4,7 @@ import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Row, SparkSession}
@@ -190,13 +190,13 @@ object StacHttp {
             csv(q.getOrElse("aggregations", ""))))
         case ("POST", List("aggregate")) =>
           val b = body()
-          val names = Option(mapper.readTree(b).get("aggregations"))
+          val p = SearchParams.fromSearchBody(b)
+          val names = Option(parseBody(b).get("aggregations"))
             .map { n =>
               import scala.jdk.CollectionConverters._
               n.elements().asScala.map(_.asText).toSeq
             }.getOrElse(Nil)
-          json(ex, 200, aggregateNode(itemsFrame,
-            SearchParams.fromSearchBody(b), names))
+          json(ex, 200, aggregateNode(itemsFrame, p, names))
         case ("GET", List("collections", c, "aggregate")) =>
           if (collectionNode(spark, dir, store, c).isEmpty)
             notFound(ex, s"Collection $c does not exist")
@@ -233,6 +233,19 @@ object StacHttp {
 
   private def csv(s: String): Seq[String] =
     s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** Every client-sent JSON body is read here: malformed JSON is the
+    * client's error (a 400 through the IAE handler), never a 500.
+    * Engine-generated JSON keeps using `mapper` directly, so a bug there
+    * still surfaces as a 500. Never null: an empty body is a MissingNode.
+    */
+  private[search] def parseBody(body: String): JsonNode =
+    try mapper.readTree(body)
+    catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new IllegalArgumentException(
+          s"malformed JSON body: ${e.getOriginalMessage}")
+    }
 
   /** Untrusted `limit` params: non-positive is a 400 (the IAE handler);
     * large finite values clamp to the STAC-suggested 10000 ceiling —

@@ -172,7 +172,7 @@ final class TxnStore(spark: SparkSession, dir: String) {
     */
   private[search] def parseFeature(body: String, collection: String,
                                    idNum: Long): ItemFields = {
-    val n = mapper.readTree(body)
+    val n = StacHttp.parseBody(body)
     val id = Option(n.get("id")).map(_.asText)
       .filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException("item must carry an id"))
@@ -275,7 +275,10 @@ final class TxnStore(spark: SparkSession, dir: String) {
     synchronized {
       val cur = effectiveItem(collection, itemId).getOrElse(
         throw new TxnMissing(s"Item $itemId does not exist in collection $collection"))
-      val merged = mergePatch(renderFeature(cur), mapper.readTree(patchBody))
+      val patch = StacHttp.parseBody(patchBody)
+      if (!patch.isObject)
+        throw new IllegalArgumentException("patch body must be a JSON object")
+      val merged = mergePatch(renderFeature(cur), patch)
       val f = parseFeature(mapper.writeValueAsString(merged), collection,
         nextIdNum()).copy(id = itemId)
       itemRevs.put((collection, itemId), ItemRev(deleted = false, f))
@@ -289,8 +292,8 @@ final class TxnStore(spark: SparkSession, dir: String) {
   }
 
   private def collectionDocNode(body: String): com.fasterxml.jackson.databind.JsonNode = {
-    val n = mapper.readTree(body)
-    if (n == null || !n.isObject)
+    val n = StacHttp.parseBody(body)
+    if (!n.isObject)
       throw new IllegalArgumentException("collection body must be a JSON object")
     n
   }

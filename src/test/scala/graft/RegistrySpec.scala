@@ -31,4 +31,21 @@ class RegistrySpec extends AnyFunSuite {
     assert(total == all.reduce(_ ++ _).size, "module registries overlap")
     assert(total == SparkEntry.queries.size)
   }
+
+  test("graft.Session is the only place a SparkSession is built") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val factory = Paths.get("src/main/scala/graft/Session.scala")
+    assert(Files.isRegularFile(factory), s"run from the repo root: $factory")
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    // the needle is split so this file does not match itself
+    val builders = sources.filter { p =>
+      p != factory && Files.readString(p).contains("SparkSession" + ".builder")
+    }
+    assert(builders.isEmpty, s"build sessions through graft.Session.local: $builders")
+  }
 }

@@ -329,6 +329,21 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(code2 == 400)
     val (code3, _) = get("/no/such/route")
     assert(code3 == 404)
+    // malformed or mis-shaped JSON bodies are client errors on every
+    // route that reads one, and a rejected write leaves the store as it was
+    val itemsBefore = server.store.itemsView().count()
+    for ((path, body) <- Seq(
+        "/search" -> "{",
+        "/search" -> """{"sortby":[{}]}""",
+        "/search" -> "[1,2]",
+        "/aggregate" -> "{",
+        "/collections/click/items" -> "{",
+        "/collections" -> "{")) {
+      val (c, e) = post(path, body)
+      assert(c == 400 && e.get("code").asText == "BadRequest", s"$path $body → $c $e")
+    }
+    assert(!server.store.hasItemChanges && !server.store.hasCollectionChanges)
+    assert(server.store.itemsView().count() == itemsBefore)
   }
 
   test("transactions (r12): create → search → patch → delete over real " +
