@@ -32,24 +32,27 @@ object BucketedLayout {
   /** Bucket count at test scale; production = table-bytes / ~256 MB. */
   val buckets = 8
 
-  private def tableName(which: String, dir: String): String =
-    s"graft_bucketed_${which}_" +
-      FixtureGuard.stateKey(dir, "orders", "lineitem")
+  /** (table name, directory) of a bucketed table: the catalog entry is
+    * the marker (a bucket spec cannot be re-registered from files), so
+    * [[Staged]] only places the directory.
+    */
+  private def table(which: String, dir: String): (String, String) = {
+    val path = Staged.location(s"graft_bucketed_$which", dir, "orders", "lineitem")
+    (new java.io.File(path).getName, path)
+  }
 
   /** Materialize orders + lineitem bucketed and sorted by the order key.
     * Idempotent per (session, dir): the catalog entry is the marker.
     */
   def materialize(spark: SparkSession, dir: String): (String, String) = {
-    val ot = tableName("orders", dir)
-    val lt = tableName("lineitem", dir)
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
+    val (ot, op) = table("orders", dir)
+    val (lt, lp) = table("lineitem", dir)
     if (!spark.catalog.tableExists(ot)) {
       Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
         .repartition(buckets, col("o_orderkey"))
         .write.mode("overwrite")
-        .option("path", s"$base/$ot")
+        .option("path", op)
         .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(ot)
     }
@@ -58,7 +61,7 @@ object BucketedLayout {
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_quantity"))
         .repartition(buckets, col("l_orderkey"))
         .write.mode("overwrite")
-        .option("path", s"$base/$lt")
+        .option("path", lp)
         .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(lt)
     }
@@ -102,10 +105,8 @@ object BucketedLayout {
     * side is pre-deduped to one row per (k, t), as B18.
     */
   def materializeAsof(spark: SparkSession, dir: String): String = {
-    val mt = tableName("asof", dir)
+    val (mt, mp) = table("asof", dir)
     if (!spark.catalog.tableExists(mt)) {
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
       val e = Tables.events(spark, dir)
         .select(col("user_id").cast("bigint").as("k"), col("ts").as("t"),
           lit(1).as("tag"), col("event_id"), lit(null).cast("bigint").as("ok"))
@@ -118,7 +119,7 @@ object BucketedLayout {
       e.unionAll(o)
         .repartition(buckets, col("k"))
         .write.mode("overwrite")
-        .option("path", s"$base/$mt")
+        .option("path", mp)
         .bucketBy(buckets, "k").sortBy("k", "t", "tag")
         .saveAsTable(mt)
     }

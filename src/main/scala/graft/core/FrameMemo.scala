@@ -24,7 +24,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * filesystem round-trip); on a real cluster each of these sites is the
   * same pattern with a different materialization: a persisted staged
   * table (write + read back, exactly what [[cached]] models) or
-  * `checkpoint()` to reliable storage.
+  * `checkpoint()` to reliable storage. Artifacts that ARE persisted
+  * across runs (staged files, state tables, indexes) go through
+  * [[Staged]], which owns their location and atomic publication.
   */
 object FrameMemo {
   // keyed on the SESSION OBJECT (reference equality — SparkSession doesn't
@@ -34,7 +36,7 @@ object FrameMemo {
   private val memo =
     new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
 
-  // persistent-RDD ids created by memoized builds, per session: the bench's
+  // persistent-RDD ids of the memoized frames, per session: the bench's
   // between-gate block-store sweep (Bench.scala) unpersists every OTHER
   // persistent RDD — per-gate localCheckpoints are garbage once the gate's
   // runs finish, but memo blocks are shared across gates and unpersisting a
@@ -43,9 +45,9 @@ object FrameMemo {
     new scala.collection.concurrent.TrieMap[SparkSession, Set[Int]]
 
   /** Persistent RDD ids owned by memoized frames of `s` — the KEEP set for
-    * harness-side block-store sweeps. Conservative: ids checkpointed while
-    * a build ran are attributed to the memo even if the memo frame itself
-    * does not reference them.
+    * harness-side block-store sweeps. Exact: the checkpointed RDD each
+    * memo frame reads; transient checkpoints made inside a build are not
+    * kept (the memo frame's truncated lineage no longer needs them).
     */
   def ownedRddIds(s: SparkSession): Set[Int] = owned.getOrElse(s, Set.empty)
 
@@ -65,12 +67,13 @@ object FrameMemo {
       if (k._1.sparkContext.isStopped) { memo.remove(k); owned.remove(k._1) }
     }
     memo.getOrElseUpdate((s, key), {
-      val before = s.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       val df = build.localCheckpoint(true)
       val secs = (System.nanoTime() - t0) / 1e9
-      val newIds = s.sparkContext.getPersistentRDDs.keySet.diff(before)
-      owned.updateWith(s)(ids => Some(ids.getOrElse(Set.empty) ++ newIds))
+      val ids = df.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+      owned.updateWith(s)(old => Some(old.getOrElse(Set.empty) ++ ids))
       System.err.println(f"[memo] $key built in $secs%.2f s")
       df
     })

@@ -50,20 +50,22 @@ object IncrementalState {
     * own path + slice filter to exercise the append path).
     */
   def materialize(spark: SparkSession, dir: String,
-                  path: String = null, slicePred: String = null): String = {
-    val p = Option(path).getOrElse {
-      val key = FixtureGuard.stateKey(dir, "orders")
-      new java.io.File(sys.props("java.io.tmpdir"), s"graft_state_$key").getAbsolutePath
+                  path: String = null, slicePred: String = null): String =
+    stateTable(path, slicePred, partials(spark, dir),
+      Staged.build("graft_state", dir, "orders"))
+
+  /** The default state table is staged once per fixture content; a
+    * caller's own `path` gets the `slicePred` rows APPENDED (the nightly
+    * refresh walk the specs drive).
+    */
+  private def stateTable(path: String, slicePred: String, st: => DataFrame,
+                         staged: (String => Unit) => String): String =
+    if (path == null) staged(st.write.partitionBy("slice").parquet(_))
+    else {
+      Option(slicePred).map(st.where).getOrElse(st)
+        .write.mode("append").partitionBy("slice").parquet(path)
+      path
     }
-    val exists = path == null && new java.io.File(p, "_SUCCESS").exists()
-    if (!exists) {
-      val st = partials(spark, dir)
-      val sliced = Option(slicePred).map(st.where).getOrElse(st)
-      sliced.write.mode(if (path == null) "overwrite" else "append")
-        .partitionBy("slice").parquet(p)
-    }
-    p
-  }
 
   /** B26: state COMPACTION — merge-at-rest, the small-files answer for
     * this table. D11's streaming appends leave one partial file per
@@ -154,20 +156,9 @@ object IncrementalState {
     * their own path + slice filter for the append walk).
     */
   def b35Materialize(spark: SparkSession, dir: String,
-                     path: String = null, slicePred: String = null): String = {
-    val p = Option(path).getOrElse {
-      val key = "b35" + FixtureGuard.stateKey(dir, "orders", "customer", "nation")
-      new java.io.File(sys.props("java.io.tmpdir"), s"graft_state_$key").getAbsolutePath
-    }
-    val exists = path == null && new java.io.File(p, "_SUCCESS").exists()
-    if (!exists) {
-      val st = b35Partials(spark, dir)
-      val sliced = Option(slicePred).map(st.where).getOrElse(st)
-      sliced.write.mode(if (path == null) "overwrite" else "append")
-        .partitionBy("slice").parquet(p)
-    }
-    p
-  }
+                     path: String = null, slicePred: String = null): String =
+    stateTable(path, slicePred, b35Partials(spark, dir),
+      Staged.build("graft_state_b35", dir, "orders", "customer", "nation"))
 
   def b35MergedFrom(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(statePath)

@@ -7,7 +7,7 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staged, Tables}
 
 /** C12: multimodal binary-column pipeline (SURVEY.md §2.C).
   *
@@ -137,12 +137,9 @@ object Multimodal {
     * then a real payload SCAN, which is what C12/C29 are supposed to
     * measure — decode cost and header-parse cost, not fixture synthesis.
     */
-  def mediaParquet(s: SparkSession, d: String): DataFrame = synchronized {
-    val path = s"/tmp/graft_media_${graft.core.FixtureGuard.stateKey(d, "documents")}"
-    if (!new java.io.File(path, "_SUCCESS").exists())
-      mediaTable(s, d).write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
-  }
+  def mediaParquet(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Staged.build("graft_media", d, "documents")(
+      mediaTable(s, d).write.parquet(_)))
 
   /** The batched decode pipeline: partition-local batching (the shape a
     * vectorized codec / model-inference call needs), no shuffle, no
@@ -370,10 +367,9 @@ object Multimodal {
     * [[mediaParquet]]: payload is a stored BYTE_ARRAY column, queries
     * against it measure decode cost, not synthesis.
     */
-  def audioParquet(s: SparkSession, d: String): DataFrame = synchronized {
+  def audioParquet(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val path = s"/tmp/graft_audio_${graft.core.FixtureGuard.stateKey(d, "documents")}"
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    s.read.parquet(Staged.build("graft_audio", d, "documents")(
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .repartition(s.sparkContext.defaultParallelism)
         .mapPartitions { ids =>
@@ -381,8 +377,7 @@ object Multimodal {
             val n = nSamplesOf(id)
             Audio(id, makeWav(id, n), c88Rate, n)
           }
-        }.write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+        }.write.parquet(_)))
   }
 
   def c88AudioDecode(s: SparkSession, d: String): DataFrame = {
@@ -498,15 +493,13 @@ object Multimodal {
     VideoFeatures(v.doc_id, frames, sampled, total, maxCut)
   }
 
-  def videoParquet(s: SparkSession, d: String): DataFrame = synchronized {
+  def videoParquet(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val path = s"/tmp/graft_video_${graft.core.FixtureGuard.stateKey(d, "documents")}"
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    s.read.parquet(Staged.build("graft_video", d, "documents")(
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .repartition(s.sparkContext.defaultParallelism)
         .mapPartitions(_.map(id => Video(id, makeVideo(id), nFramesOf(id))))
-        .write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+        .write.parquet(_)))
   }
 
   def c89VideoSample(s: SparkSession, d: String): DataFrame = {

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staged, Tables}
 import TextExprs._
 
 /** C8-C11: text analysis operators for an LLM training-data pipeline,
@@ -266,13 +266,10 @@ object TextAnalysis {
     * Plan-audited: the serving plan reads no `text` column and no
     * documents.parquet — index tables only.
     */
-  private[graft] def c78IndexPath(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    // v2: postings carry POSITIONS (C79's phrase serving); C78's
-    // tf-only query prunes the column away (plan-audited)
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_invindex_v2_$key").getAbsolutePath
-    if (!new java.io.File(s"$root/meta", "_SUCCESS").exists()) {
+  // v2: postings carry POSITIONS (C79's phrase serving); C78's
+  // tf-only query prunes the column away (plan-audited)
+  private[graft] def c78IndexPath(s: SparkSession, d: String): String =
+    Staged.build("graft_invindex_v2", d, "documents") { root =>
       val postings = docs(s, d)
         .select(col("doc_id"), posexplode(expr(wordsSpark)).as(Seq("p", "w")))
         .where(col("w") =!= "")
@@ -281,15 +278,13 @@ object TextAnalysis {
           sort_array(collect_list(col("p"))).as("positions"))
       postings
         .repartition(col("w")).sortWithinPartitions(col("w"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$root/postings")
+        .write.parquet(s"$root/postings")
       postings.groupBy(col("w"))
         .agg(countDistinct(col("doc_id")).as("df"))
-        .write.mode("overwrite").parquet(s"$root/terms")
+        .write.parquet(s"$root/terms")
       docs(s, d).agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$root/meta")
+        .write.parquet(s"$root/meta")
     }
-    root
-  }
 
   /** The index-serving score plan over a postings frame (w, doc_id, tf)
     * and a 1-row stats frame (n, df_0..df_k): per-doc tf pivoted to
@@ -947,20 +942,13 @@ object TextAnalysis {
     total
   }
 
-  // Last sidecar written by c87CompressionRatio; read lazily by c87Sql so
-  // the oracle dumped AFTER the Verify query loop points at this run's
-  // per-doc deflate frame (Verify.scala evaluates oracleSql post-loop).
-  @volatile private[graft] var c87SidecarPath: String = "/tmp/graft_c87_bytes_unset"
+  // the per-doc deflate sidecar; c87Sql reads back the one the gate
+  // last staged (Verify.scala evaluates oracleSql post-loop)
+  private val c87Sidecar = "graft_c87_bytes"
 
   def c87CompressionRatio(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // keyed on a CONTENT fingerprint of the input files (not the dir
-    // string): an in-place fixture regeneration or a sanitized-path
-    // collision (sf0.1 vs sf0_1) gets a fresh sidecar, never stale bytes
-    val path = "/tmp/graft_c87_bytes_" +
-      graft.core.FixtureGuard.fingerprint(d, "documents")
-    c87SidecarPath = path
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    val path = Staged.build(c87Sidecar, d, "documents") { p =>
       docs(s, d).select(col("doc_id"), col("source"), col("text"))
         .as[(Long, String, String)]
         .mapPartitions { it =>
@@ -974,7 +962,7 @@ object TextAnalysis {
             (id, src, bytes.length.toLong, comp)
           }
         }.toDF("doc_id", "source", "raw_bytes", "comp_bytes")
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(p)
     }
     s.read.parquet(path)
       .groupBy(col("source"))
@@ -998,7 +986,7 @@ object TextAnalysis {
   def c87Sql: String =
     s"""WITH comp AS (
        |  SELECT doc_id, comp_bytes
-       |  FROM read_parquet('$c87SidecarPath/*.parquet')),
+       |  FROM read_parquet('${Staged.latest(c87Sidecar)}/*.parquet')),
        |per AS (
        |  SELECT d.source,
        |    CAST(octet_length(encode(d.text)) AS BIGINT) AS raw_bytes,
@@ -1406,17 +1394,12 @@ object TextAnalysis {
     * unchanged). Idempotent per dir (B24's materialize pattern); the
     * fixture dirs are immutable so the artifact can't go stale.
     */
-  private def c32Dictionary(s: SparkSession, d: String): DataFrame = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_tokenizer_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists()) {
+  private def c32Dictionary(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Staged.build("graft_tokenizer", d, "documents") { p =>
       val (_, vocab) = c32Train(s, d)
       vocab.select(col("w"), expr(s"size($c32Symbols)").cast("long").as("n_tok"))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(p)
-  }
+        .write.parquet(p)
+    })
 
   // ------------------- C50 versioned tokenizer artifact state table
   /** C50: the tokenizer artifact as a VERSIONED state table — the
@@ -1445,11 +1428,8 @@ object TextAnalysis {
   private[graft] def c50Retrain(corpus: DataFrame): DataFrame =
     c50Dict(c32TrainOn(corpus)._2)
 
-  private[graft] def c50Materialize(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_tokver1_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists()) {
+  private[graft] def c50Materialize(s: SparkSession, d: String): String =
+    Staged.build("graft_tokver1", d, "documents") { p =>
       // v1: the corpus as of the first build; v2: a later full retrain.
       // Each append is a new partition — nothing existing is rewritten.
       Seq(1 -> docs(s, d).where(col("doc_id") % 2 === 0), 2 -> docs(s, d))
@@ -1458,8 +1438,6 @@ object TextAnalysis {
             .write.mode("append").partitionBy("version").parquet(p)
         }
     }
-    p
-  }
 
   def c50TokenizerVersions(s: SparkSession, d: String): DataFrame = {
     val st = s.read.parquet(c50Materialize(s, d))

@@ -431,6 +431,7 @@ object StacApi {
         result(page, sorts, p, numMatched)
       case Some(t) if t.startsWith("off:") =>
         val off = t.drop(4).toInt
+        require(off >= 0, s"bad token: $t")
         val page = sorted.offset(off).limit(p.limit + 1).collect()
         resultOffset(page, p, numMatched, off)
       case None =>
@@ -472,7 +473,12 @@ object StacApi {
                            df: DataFrame): Seq[Option[Any]] = {
     import org.apache.spark.sql.types._
     val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    s.split(ksSep, -1).toSeq.zip(sorts).map { case (v, (f, _)) =>
+    val vals = s.split(ksSep, -1).toSeq
+    // a token minted for another sort order is a client error, not an
+    // index past the end in keysetAfter
+    require(vals.size == sorts.size,
+      s"bad token: ${vals.size} keyset values for ${sorts.size} sort fields")
+    vals.zip(sorts).map { case (v, (f, _)) =>
       if (v == ksNull) None
       else Some(types(f) match {
         case LongType      => v.toLong

@@ -66,6 +66,11 @@ object StacHttp {
 
   private val mapper = new ObjectMapper()
 
+  /** Largest request body read; a longer one is a 400 before it can
+    * exhaust the driver's heap.
+    */
+  val maxBodyBytes: Int = 8 << 20
+
   final class Server private[StacHttp] (val http: HttpServer,
       pool: java.util.concurrent.ExecutorService,
       /** The transaction overlay (r12): HTTP writes land here; every
@@ -104,7 +109,12 @@ object StacHttp {
       }
       val q = queryParams(ex)
       def itemsFrame = store.itemsView()
-      def body(): String = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+      def body(): String = {
+        val bytes = ex.getRequestBody.readNBytes(maxBodyBytes + 1)
+        if (bytes.length > maxBodyBytes)
+          throw new IllegalArgumentException(s"request body exceeds $maxBodyBytes bytes")
+        new String(bytes, UTF_8)
+      }
       (ex.getRequestMethod, path.split("/").toList.drop(1)) match {
         case ("GET", Nil) | ("GET", List("")) => json(ex, 200, landing())
         case ("GET", List("conformance")) =>

@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staged, Tables}
 import graft.cql.{Cql, Cql2Text}
 import graft.spatial.Geo
 
@@ -1037,18 +1037,20 @@ object StacSearch {
 
   // private[graft]: the layout spec audits THESE dirs instead of re-deriving
   // the key (r11 ADVICE — a drifted re-derivation inspects the wrong dir)
-  private[graft] def a63Paths(s: SparkSession, d: String): (String, String) = {
-    val key = graft.core.FixtureGuard.stateKey(d, "events")
-    val lp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemszlayout_$key").getAbsolutePath
-    val mp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemsmanifest_$key").getAbsolutePath
-    if (!new java.io.File(lp, "_SUCCESS").exists())
-      graft.core.ItemsLayout.materializeZOrdered(items(s, d), zCellColumn, lp,
-        numFiles = 16)
-    if (!new java.io.File(mp, "_SUCCESS").exists())
-      graft.core.ItemsLayout.coveringManifest(s, lp)
-        .write.mode("overwrite").parquet(mp)
+  private[graft] def a63Paths(s: SparkSession, d: String): (String, String) =
+    layoutWithManifest(s, d, "graft_itemszlayout", "graft_itemsmanifest")(
+      graft.core.ItemsLayout.materializeZOrdered(items(s, d), zCellColumn, _,
+        numFiles = 16))
+
+  /** A layout plus its covering manifest, each staged once per fixture
+    * content. The manifest is built from the PUBLISHED layout, so the
+    * file paths it records are the ones readers open.
+    */
+  private def layoutWithManifest(s: SparkSession, d: String, layout: String,
+      manifest: String)(write: String => Unit): (String, String) = {
+    val lp = Staged.build(layout, d, "events")(write)
+    val mp = Staged.build(manifest, d, "events")(
+      graft.core.ItemsLayout.coveringManifest(s, lp).write.parquet(_))
     (lp, mp)
   }
 
@@ -1099,20 +1101,10 @@ object StacSearch {
     * NOR interval item was lost to the prune. ItemsLayoutSpec asserts
     * files are actually skipped on the temporal layout.
     */
-  private[graft] def a64Paths(s: SparkSession, d: String): (String, String) = {
-    val key = graft.core.FixtureGuard.stateKey(d, "events")
-    val lp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemstlayout_$key").getAbsolutePath
-    val mp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemstmanifest_$key").getAbsolutePath
-    if (!new java.io.File(lp, "_SUCCESS").exists())
+  private[graft] def a64Paths(s: SparkSession, d: String): (String, String) =
+    layoutWithManifest(s, d, "graft_itemstlayout", "graft_itemstmanifest")(
       graft.core.ItemsLayout.materializeSorted(items(s, d),
-        coalesce(col("datetime"), col("start_datetime")), lp, numFiles = 16)
-    if (!new java.io.File(mp, "_SUCCESS").exists())
-      graft.core.ItemsLayout.coveringManifest(s, lp)
-        .write.mode("overwrite").parquet(mp)
-    (lp, mp)
-  }
+        coalesce(col("datetime"), col("start_datetime")), _, numFiles = 16))
 
   private[graft] def a64CandidateFiles(s: SparkSession, d: String,
       lo: String, hi: String): Seq[String] = {
@@ -1990,11 +1982,8 @@ object StacSearch {
     * writer, footer, decoder, or covering column is a value mismatch.
     * Gate-internal requires pin the metadata plane (version, CRS, types).
     */
-  @volatile private var a75Path: String = "/tmp/graft_geoparquet_unset/items.parquet"
-
   def a75GeoparquetIngest(s: SparkSession, d: String): DataFrame = {
     val (df, meta) = graft.core.GeoParquet.ingestItems(s, d)
-    a75Path = graft.core.GeoParquet.stagedPath(d)
     require(meta.version == "1.1.0" && meta.primaryColumn == "geometry" &&
       meta.crsAuthority == "OGC" && meta.crsCode == "CRS84" &&
       meta.geometryTypes == Seq("Point", "Polygon"),
@@ -2017,7 +2006,7 @@ object StacSearch {
        |  SELECT id, id_num, collection, datetime, lon, lat,
        |    CAST(user_id % 10 AS DOUBLE) / 10.0 + 0.1 AS hw,
        |    CAST(id_num % 7 AS DOUBLE) / 10.0 + 0.1 AS hh
-       |  FROM read_parquet('$a75Path'))
+       |  FROM read_parquet('${Staged.latest(graft.core.GeoParquet.itemsName)}'))
        |ORDER BY id""".stripMargin
 
   // ------------------ A96: EPSG:3857 (Pseudo-Mercator) ingest (r12)
@@ -2038,11 +2027,8 @@ object StacSearch {
     * (λ = x/R, φ = 2·atan(exp(y/R)) − π/2 — monotone per axis, so the
     * bbox corners map to the envelope corners).
     */
-  @volatile private var a96Path: String = "/tmp/graft_geoparquet_unset/items_3857.parquet"
-
   def a96MercatorIngest(s: SparkSession, d: String): DataFrame = {
     val file = graft.core.GeoParquet.stageMercator(s, d)
-    a96Path = file
     val (df, meta) = graft.core.GeoParquet.ingestFile(s, file)
     require(meta.version == "1.1.0" && meta.primaryColumn == "geometry" &&
       meta.crsAuthority == "EPSG" && meta.crsCode == "3857",
@@ -2068,13 +2054,11 @@ object StacSearch {
        |  ${latT("bbox.ymax")} AS t_ymax,
        |  bbox.xmin AS c_xmin, bbox.ymin AS c_ymin,
        |  bbox.xmax AS c_xmax, bbox.ymax AS c_ymax
-       |FROM read_parquet('$a96Path')
+       |FROM read_parquet('${Staged.latest(graft.core.GeoParquet.mercatorName)}')
        |ORDER BY id""".stripMargin
   }
 
   // -------------------------------- A82 distributed GeoParquet EXPORT
-  @volatile private var a82Dir: String = "/tmp/graft_geoparquet_export_unset"
-
   /** A82: the WRITE side of the reference's data plane — its corpus IS a
     * per-collection GeoParquet catalog (database_logic.py:831-853 scans
     * one file per collection; download_geoparquet.py materializes them).
@@ -2093,7 +2077,6 @@ object StacSearch {
   def a82GeoparquetExport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val out = graft.core.GeoParquet.export(s, d)
-    a82Dir = out
     // shards=1 ⇒ one file per collection, stem "<collection>-0"
     val fDf = graft.core.GeoParquet.footerBboxes(out).toSeq.map {
       case (stem, b) => (stem.stripSuffix("-0"), b(0), b(1), b(2), b(3))
@@ -2110,9 +2093,11 @@ object StacSearch {
       .orderBy(col("id"))
   }
 
-  // ---------------------- A85 spatially-sharded catalog + footer prune
-  @volatile private var a85Dir: String = "/tmp/graft_geoparquet_export_unset"
+  /** The exported catalog an oracle reads back: the one its gate staged. */
+  private def exported(shards: Int, tag: String): String =
+    Staged.latest(graft.core.GeoParquet.exportName(shards, tag))
 
+  // ---------------------- A85 spatially-sharded catalog + footer prune
   /** A85: the catalog completes into a SPATIAL INDEX — export with
     * Z-BUCKET sharding (shard = level-6 z-cell bucket, so each file's
     * exact footer bbox covers one compact region), then answer a bbox
@@ -2131,7 +2116,6 @@ object StacSearch {
     val zShards = 8 // level-6 z space (4096 cells) in 512-cell buckets
     val shardCol = (zCellColumn.cast("long") * lit(zShards) / lit(4096)).cast("long")
     val out = graft.core.GeoParquet.export(s, d, zShards, Some(shardCol), tag = "z")
-    a85Dir = out
     val (w, so, e, n) = a85Box
     val (df, total, read) = graft.core.GeoParquet.searchBboxPruned(s, out, w, so, e, n)
     require(read < total,
@@ -2149,14 +2133,13 @@ object StacSearch {
     s"""SELECT id, collection,
        |  bbox.xmin AS xmin, bbox.ymin AS ymin,
        |  bbox.xmax AS xmax, bbox.ymax AS ymax
-       |FROM read_parquet('$a85Dir/*.parquet')
+       |FROM read_parquet('${exported(8, "z")}/*.parquet')
        |WHERE bbox.xmin <= $e AND bbox.xmax >= $w
        |  AND bbox.ymin <= $n AND bbox.ymax >= $so
        |ORDER BY id""".stripMargin
   }
 
   // ------------- A87 catalog DataSource V2: plan-time footer prune
-  @volatile private var a87Dir: String = "/tmp/graft_geoparquet_export_unset"
   private val a87Checked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -2175,7 +2158,6 @@ object StacSearch {
     val zShards = 8
     val shardCol = (zCellColumn.cast("long") * lit(zShards) / lit(4096)).cast("long")
     val out = graft.core.GeoParquet.export(s, d, zShards, Some(shardCol), tag = "z")
-    a87Dir = out
     val (w, so, e, n) = a85Box
     val df = s.read.format("graft.sources.GeoCatalogSource").load(out)
       .where(col("bbox.xmin") <= e && col("bbox.xmax") >= w &&
@@ -2201,14 +2183,13 @@ object StacSearch {
     s"""SELECT id, collection,
        |  bbox.xmin AS xmin, bbox.ymin AS ymin,
        |  bbox.xmax AS xmax, bbox.ymax AS ymax
-       |FROM read_parquet('$a87Dir/*.parquet')
+       |FROM read_parquet('${exported(8, "z")}/*.parquet')
        |WHERE bbox.xmin <= $e AND bbox.xmax >= $w
        |  AND bbox.ymin <= $n AND bbox.ymax >= $so
        |ORDER BY id""".stripMargin
   }
 
   // ----- A89 collection + datetime FILE prune on the catalog DSv2 (r11)
-  @volatile private var a89Dir: String = "/tmp/graft_geoparquet_export_unset"
   private val a89Checked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -2236,7 +2217,6 @@ object StacSearch {
   def a89CatalogColdtPrune(s: SparkSession, d: String): DataFrame = {
     val shardCol = dayofmonth(coalesce(col("datetime"), col("start_datetime")))
     val out = graft.core.GeoParquet.export(s, d, 31, Some(shardCol), tag = "t")
-    a89Dir = out
     // NTZ literals so the pushed filters stay bare attribute comparisons
     // (a TIMESTAMP literal would wrap the NTZ column in a cast and kill
     // the pushdown)
@@ -2263,7 +2243,7 @@ object StacSearch {
 
   def a89Sql: String =
     s"""SELECT id, collection, datetime, start_datetime, end_datetime
-       |FROM read_parquet('$a89Dir/*.parquet')
+       |FROM read_parquet('${exported(31, "t")}/*.parquet')
        |WHERE collection IN ('click', 'view')
        |  AND ((datetime >= TIMESTAMP '$a89Lo' AND datetime <= TIMESTAMP '$a89Hi')
        |    OR (datetime IS NULL AND start_datetime <= TIMESTAMP '$a89Hi'
@@ -2271,9 +2251,6 @@ object StacSearch {
        |ORDER BY id""".stripMargin
 
   // ------------------------------------ A86 catalog compaction
-  @volatile private var a86SrcDir: String = "/tmp/graft_geoparquet_export_unset"
-  @volatile private var a86Dir: String = "/tmp/graft_geoparquet_export_unset"
-
   /** A86: catalog COMPACTION — the 100 TB maintenance op (many small
     * shard files merged into few, Z locality preserved): reads the A85
     * z8 catalog's FILES (pure data plane — the source view is never
@@ -2291,7 +2268,6 @@ object StacSearch {
     import s.implicits._
     val src = graft.core.GeoParquet.export(s, d, 8, Some(a86Shard(8)), tag = "z")
     val out = graft.core.GeoParquet.compact(s, src, d, 2, a86Shard(2))
-    a86SrcDir = src; a86Dir = out
     val fDf = graft.core.GeoParquet.footerBboxes(out).toSeq.map { case (stem, b) =>
       val cut = stem.lastIndexOf('-')
       (stem.substring(0, cut), stem.substring(cut + 1).toLong, b(0), b(1), b(2), b(3))
@@ -2317,7 +2293,7 @@ object StacSearch {
        |    CAST(floor((($zrCellSqlDuck) * 2) / 4096.0) AS BIGINT) AS shard,
        |    bbox.xmin AS xmin, bbox.ymin AS ymin,
        |    bbox.xmax AS xmax, bbox.ymax AS ymax
-       |  FROM read_parquet('$a86SrcDir/*.parquet'))
+       |  FROM read_parquet('${exported(8, "z")}/*.parquet'))
        |ORDER BY id""".stripMargin
 
   def a82Sql: String =
@@ -2337,7 +2313,7 @@ object StacSearch {
        |    SELECT id, id_num, collection, datetime, lon, lat,
        |      CAST(user_id % 10 AS DOUBLE) / 10.0 + 0.1 AS hw,
        |      CAST(id_num % 7 AS DOUBLE) / 10.0 + 0.1 AS hh
-       |    FROM read_parquet('$a82Dir/*.parquet')))
+       |    FROM read_parquet('${exported(1, "s")}/*.parquet')))
        |ORDER BY id""".stripMargin
 
   // --------------------- A40/A41 non-polygon GeoJSON types in s_intersects
@@ -3098,9 +3074,10 @@ object StacSearch {
     * the file → JSON → typed-row path must land exactly where the
     * literal path does.
     */
-  private def a65ConfigDir(): String = {
-    val p = new java.io.File(sys.props("java.io.tmpdir"), "graft_collectionjson_v1")
-    if (!new java.io.File(p, "_DONE").exists()) {
+  // keyed on no fixture table: the documents derive from collectionMeta only
+  private def a65ConfigDir(): String =
+    Staged.build("graft_collectionjson_v1", "") { dir =>
+      val p = new java.io.File(dir)
       p.mkdirs()
       collectionMeta.foreach { case (c, t, l, de) =>
         val json =
@@ -3111,11 +3088,7 @@ object StacSearch {
         java.nio.file.Files.write(
           new java.io.File(p, s"$c.json").toPath, json.getBytes("UTF-8"))
       }
-      java.nio.file.Files.write(
-        new java.io.File(p, "_DONE").toPath, Array.emptyByteArray)
     }
-    p.getAbsolutePath
-  }
 
   def a65CollectionJsonIngest(s: SparkSession, d: String): DataFrame = {
     val schema = "id STRING, title STRING, license STRING, description STRING, " +
@@ -3247,20 +3220,16 @@ object StacSearch {
     * passes its own path + slice filter to drive the append path).
     */
   def a54Materialize(s: SparkSession, d: String,
-                     path: String = null, slicePred: String = null): String = {
-    val p = Option(path).getOrElse {
-      val key = graft.core.FixtureGuard.stateKey(d, "events")
-      new java.io.File(sys.props("java.io.tmpdir"), s"graft_extents_$key").getAbsolutePath
-    }
-    val exists = path == null && new java.io.File(p, "_SUCCESS").exists()
-    if (!exists) {
+                     path: String = null, slicePred: String = null): String =
+    if (path == null)
+      Staged.build("graft_extents", d, "events")(
+        a54ExtentPartials(s, d).write.partitionBy("slice").parquet(_))
+    else {
       val st = a54ExtentPartials(s, d)
-      val sliced = Option(slicePred).map(st.where).getOrElse(st)
-      sliced.write.mode(if (path == null) "overwrite" else "append")
-        .partitionBy("slice").parquet(p)
+      Option(slicePred).map(st.where).getOrElse(st)
+        .write.mode("append").partitionBy("slice").parquet(path)
+      path
     }
-    p
-  }
 
   /** Merge-on-read: the served directory — identical output (and oracle)
     * to [[a26Collections]].
@@ -3313,14 +3282,9 @@ object StacSearch {
         date_format(coalesce(col("datetime"), col("start_datetime")), "yyyy-MM"))
       .groupBy(col("slice"), col("collection")))
 
-  def a55Materialize(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "events")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_queryables_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists())
-      a55StatPartials(s, d).write.mode("overwrite").partitionBy("slice").parquet(p)
-    p
-  }
+  def a55Materialize(s: SparkSession, d: String): String =
+    Staged.build("graft_queryables", d, "events")(
+      a55StatPartials(s, d).write.partitionBy("slice").parquet(_))
 
   def a55QueryablesIncremental(s: SparkSession, d: String): DataFrame =
     s.read.parquet(a55Materialize(s, d))

@@ -263,7 +263,7 @@ class ItemsLayoutSpec extends AnyFunSuite {
         parts.map(_(2)).max == want.getDouble(2) &&
         parts.map(_(3)).max == want.getDouble(3))
     }
-    // idempotent: a second call sees _SUCCESS and returns without rewrite
+    // idempotent: a second call adopts the published dir without rewrite
     val before = new java.io.File(out).listFiles().map(f => f.getName -> f.lastModified).toMap
     assert(GeoParquet.export(s, TestSpark.sf, shards = 2) == out)
     val after = new java.io.File(out).listFiles().map(f => f.getName -> f.lastModified).toMap

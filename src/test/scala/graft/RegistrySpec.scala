@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract guards: every declared operator must be oracle-paired
@@ -32,20 +36,31 @@ class RegistrySpec extends AnyFunSuite {
     assert(total == SparkEntry.queries.size)
   }
 
+  private def scalaSources(roots: String*): Seq[Path] = roots.flatMap { root =>
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("graft.Session is the only place a SparkSession is built") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val factory = Paths.get("src/main/scala/graft/Session.scala")
     assert(Files.isRegularFile(factory), s"run from the repo root: $factory")
-    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
     // the needle is split so this file does not match itself
-    val builders = sources.filter { p =>
+    val builders = scalaSources("src/main/scala", "src/test/scala").filter { p =>
       p != factory && Files.readString(p).contains("SparkSession" + ".builder")
     }
     assert(builders.isEmpty, s"build sessions through graft.Session.local: $builders")
+  }
+
+  test("graft.core.Staged is the only place a persisted artifact is placed") {
+    val staged = Paths.get("src/main/scala/graft/core/Staged.scala")
+    assert(Files.isRegularFile(staged), s"run from the repo root: $staged")
+    val needles = Seq("java.io.tmpdir", "\"/tmp/graft", "_unset\"")
+    val offenders = for {
+      p <- scalaSources("src/main/scala") if p != staged
+      text = Files.readString(p)
+      n <- needles if text.contains(n)
+    } yield s"$p: $n"
+    assert(offenders.isEmpty, s"place persisted artifacts through graft.core.Staged: $offenders")
   }
 }

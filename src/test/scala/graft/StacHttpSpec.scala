@@ -329,6 +329,12 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(code2 == 400)
     val (code3, _) = get("/no/such/route")
     assert(code3 == 404)
+    // malformed page tokens: a keyset token with fewer values than sort
+    // fields, and a negative offset
+    for (path <- Seq("/search?sortby=value&token=ks:1", "/search?token=off:-1")) {
+      val (c, e) = get(path)
+      assert(c == 400 && e.get("code").asText == "BadRequest", s"$path → $c $e")
+    }
     // malformed or mis-shaped JSON bodies are client errors on every
     // route that reads one, and a rejected write leaves the store as it was
     val itemsBefore = server.store.itemsView().count()
@@ -342,6 +348,10 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (c, e) = post(path, body)
       assert(c == 400 && e.get("code").asText == "BadRequest", s"$path $body → $c $e")
     }
+    // a body past the cap is refused before it is parsed
+    val huge = """{"limit":1,"pad":"""" + "x" * StacHttp.maxBodyBytes + "\"}"
+    val (cHuge, eHuge) = post("/search", huge)
+    assert(cHuge == 400 && eHuge.get("code").asText == "BadRequest", s"$cHuge $eHuge")
     assert(!server.store.hasItemChanges && !server.store.hasCollectionChanges)
     assert(server.store.itemsView().count() == itemsBefore)
   }
